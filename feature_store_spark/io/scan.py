@@ -18,10 +18,17 @@ tiebreaks everywhere).
 The split-count probe is a local-file SIZE ESTIMATE, not
 ``df.rdd.getNumPartitions()``: converting the frame to an RDD plans the
 query a second time and measured 120-190 ms of driver work per call —
-more than some whole queries save.  The estimate mirrors Spark's split
-packing (each file charged ``openCostInBytes`` on top of its size,
-divided by ``maxPartitionBytes``), which errs only by a small constant;
-an unparseable scheme or conf falls back to the exact RDD probe.
+more than some whole queries save.  The estimate APPROXIMATES Spark's
+split packing: each file is charged ``openCostInBytes`` on top of its
+size and the total divided by ``maxPartitionBytes``.  It omits Spark's
+``maxSplitBytes`` clamp (``min(maxPartitionBytes, max(openCostInBytes,
+totalBytes / minPartitionNum))``), so it can miscount: it under-counts
+small multi-file scans (an extra repartition Spark's own splits would
+not need), and with a ``maxPartitionBytes`` below ``openCostInBytes``
+the per-file open cost inflates it (a fan-out that would pay is
+skipped).  Repartitioning is semantics-preserving here, so either error
+costs time only.  An unparseable scheme or conf falls back to the exact
+RDD probe.
 """
 
 from __future__ import annotations
@@ -44,10 +51,11 @@ def _parse_bytes(v: str) -> int:
 
 
 def _estimated_splits(df: DataFrame) -> int | None:
-    """Approximate scan split count from local file sizes (Spark's
-    packing: each file costs size + openCostInBytes, packed into
-    maxPartitionBytes splits).  None when the estimate can't be made
-    cheaply (non-local files, empty listing)."""
+    """Approximate scan split count from local file sizes: each file
+    costs size + openCostInBytes, packed into maxPartitionBytes splits.
+    This approximates Spark's packing but omits its maxSplitBytes clamp,
+    so it can miscount (see the module docstring).  None when the
+    estimate can't be made cheaply (non-local files, empty listing)."""
     spark = df.sparkSession
     files = df.inputFiles()
     if not files:
@@ -78,6 +86,9 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     per-pair vector math).  The data moved is the scan's own (small)
     output; the unlocked parallelism is worth orders more than the local
     exchange when the input is a handful of splits.
+
+    The current split count comes from :func:`_estimated_splits`, an
+    approximation of Spark's split packing, not an exact mirror of it.
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism

@@ -15,16 +15,13 @@ one module, so swapping in ``df.writeTo(...)`` is local.
 
 Layout:  <root>/<table>/data/v{seq}/<partition_col>=<value>/*.parquet
          <root>/<table>/_manifest.jsonl  (append-only snapshot log)
-         <root>/<table>/_manifest.json   (legacy array-format log prefix)
 
 The snapshot log is APPEND-ONLY JSONL — one line per commit, O(rows
-written) commit cost on the metadata side too.  Round 3 rewrote the whole
-JSON array every commit, making manifest maintenance O(P²) in commits
-(round-3 ADVICE).  Tables written by older rounds keep their
-``_manifest.json`` as an immutable prefix; new commits only ever append
-lines to the JSONL.  A torn final line (crash mid-append) is ignored on
-read — its version dir was never referenced, and the next commit reuses
-the sequence number and overwrites that dir.
+written) commit cost on the metadata side too (rewriting a whole log per
+commit would make manifest maintenance O(P²) in commits).  A torn final
+line (crash mid-append) is ignored on read — its version dir was never
+referenced, and the next commit reuses the sequence number and
+overwrites that dir.
 
 Concurrency contract: ONE writer per table (the orchestrator's per-table
 checkpointed pipelines give this naturally).  Concurrent committers
@@ -82,15 +79,11 @@ class PartitionedTable:
         self.path = os.path.join(root, name)
         self.data_path = os.path.join(self.path, "data")
         self.partition_col = partition_col
-        self._legacy_manifest_path = os.path.join(self.path, "_manifest.json")
         self._manifest_path = os.path.join(self.path, "_manifest.jsonl")
 
     # -- manifest ------------------------------------------------------
     def _read_manifest(self) -> list[dict]:
         log: list[dict] = []
-        if os.path.exists(self._legacy_manifest_path):
-            with open(self._legacy_manifest_path) as f:
-                log = json.load(f)
         if os.path.exists(self._manifest_path):
             with open(self._manifest_path) as f:
                 lines = [ln for ln in f.read().splitlines() if ln.strip()]
@@ -198,17 +191,25 @@ class PartitionedTable:
         not a downstream join).  Mutually exclusive with ``merge_schema``
         semantics (the explicit schema IS the merged view), so it wins.
 
-        A manifest-listed dir missing on disk raises (silently skipping
-        would under-read committed data).
+        A partition name the snapshot does not hold raises, as does a
+        manifest-listed dir missing on disk (silently skipping either
+        would under-read: a typo would return a partial or empty frame).
         """
         snap = (
             self.snapshot(snapshot_id) if snapshot_id else self.current_snapshot()
         )
         if snap is None:
             raise FileNotFoundError(f"table {self.path} has no snapshot")
-        wanted = sorted(snap.mapping) if partitions is None else [
-            p for p in sorted(snap.mapping) if p in set(partitions)
-        ]
+        if partitions is None:
+            wanted = sorted(snap.mapping)
+        else:
+            unknown = sorted(set(partitions) - set(snap.mapping))
+            if unknown:
+                raise FileNotFoundError(
+                    f"{self.path}: partitions not in snapshot "
+                    f"{snap.snapshot_id}: {unknown}"
+                )
+            wanted = sorted(set(partitions))
         leaf_dirs, missing = [], []
         for p in wanted:
             for d in snap.mapping[p]:
@@ -222,7 +223,7 @@ class PartitionedTable:
                 f"disk (data corruption or external delete), e.g. {missing[0]}"
             )
         if not leaf_dirs:
-            # Distinguish "partition unknown" (error) from "every wanted
+            # Distinguish "nothing wanted" (error) from "every wanted
             # partition is a legitimately committed EMPTY partition"
             # (zero-dir mapping — the empty-commit semantics added round
             # 5): the latter must read back as an empty frame, not crash
@@ -421,11 +422,10 @@ class PartitionedTable:
         ``state_kind``) must keep working, or every expire would trigger
         a permanent full-history recompute.
 
-        The log rewrite is atomic (tmp + rename, legacy-prefix file
-        folded in); deletion targets every on-disk version dir NOT
-        referenced by a retained snapshot — which also sweeps orphans
-        from earlier crashes (torn commits, a prior expire killed
-        mid-delete).  Safe under the single-writer contract: no
+        The log rewrite is atomic (tmp + rename); deletion targets every
+        on-disk version dir NOT referenced by a retained snapshot — which
+        also sweeps orphans from earlier crashes (torn commits, a prior
+        expire killed mid-delete).  Safe under the single-writer contract: no
         concurrent commit can be mid-flight.  Returns
         ``{"expired": n, "deleted_dirs": [...]}``."""
         import glob as _glob
@@ -485,8 +485,6 @@ class PartitionedTable:
                 f.flush()
                 os.fsync(f.fileno())
             os.replace(tmp, self._manifest_path)
-            if os.path.exists(self._legacy_manifest_path):
-                os.remove(self._legacy_manifest_path)  # folded into JSONL
         referenced = {
             os.path.normpath(d)
             for e in kept

@@ -164,7 +164,14 @@ def lsh_candidate_pairs_with_stats(
     sides of the bucket self-join (and the hot-bucket rank/report), and
     without the persist the whole upstream shingle/md5 pipeline is
     evaluated once per consumer.  Release via ``release_caches()`` /
-    ``cache_scope()`` as with the sliced as-of cache."""
+    ``cache_scope()`` as with the sliced as-of cache.
+
+    The persist and its registration happen when the frames are BUILT,
+    not when they execute, and ``dup_clusters`` over these pairs
+    materializes the cache while it builds (the connected-components
+    driver loop runs Spark jobs).  So building, not only executing, LSH
+    and ``dup_clusters`` queries leaves live cached frames behind: a
+    long-lived driver should wrap the builds in ``cache_scope()``."""
     if wide_signatures is not None:
         piv = wide_signatures
         def _sig_col(i: int):

@@ -107,14 +107,6 @@ class FeatureRegistry:
     def register_derived(self, feature: DerivedFeature) -> None:
         self.derived.append(feature)
 
-    def feature_names(self) -> list[str]:
-        out = []
-        for a in self.anchors.values():
-            out += [f.name for f in a.features]
-            out += [w.name for w in a.window_features]
-        out += [d.name for d in self.derived]
-        return out
-
 
 def _anchor_feature_frame(source: DataFrame, anchor: FeatureAnchor) -> DataFrame:
     """Evaluate the anchor's plain features over its source."""

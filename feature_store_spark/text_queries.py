@@ -33,11 +33,7 @@ def _embs(spark, sf) -> DataFrame:
     evaluated map-side in the scan stage (guide §2.5 input skew)."""
     return fan_out(t(spark, sf, "embeddings"))
 
-# deterministic 60-bit hash shared by both dialects
-def _spark_h60(col):
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
+# DuckDB twin of operators.dedup.h60 (deterministic 60-bit hash)
 def _sql_h60(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 

@@ -4,14 +4,20 @@
 # executor registration, interleaved reps, host probes): the bench_job
 # dedup phase (minhash signatures -> LSH candidate pairs over synthetic
 # documents) at local-cluster[2,4] (N=8 cores) vs local-cluster[8,4]
-# (4N=32 cores), with 4M docs so the 8-core wall is ~2 min and the
-# measurement is capacity-bound, not stage-latency-bound.
-# Usage: scripts/bench_scaling_dedup.sh   (REPS env, default 3)
+# (4N=32 cores).  The defaults (NDOCS=4M docs of NWORDS=40 words) make
+# the 8-core wall ~2 min, so the measurement is capacity-bound, not
+# stage-latency-bound.  Long documents (e.g. NDOCS=80000 NWORDS=1000)
+# measure the web-scale regime, where shingle/md5 capacity dominates the
+# LSH tail on the 8-core side.  Raw samples land in
+# BENCH/raw_cluster_dedup_n<NDOCS>_w<NWORDS>_<cores>.jsonl.
+# Usage: scripts/bench_scaling_dedup.sh [data_root]
+#        (env: REPS default 3, NDOCS default 4000000, NWORDS default 40)
 set -e
 cd "$(dirname "$0")/.."
 ROOT="${1:-BENCH/data/scaling}"
 REPS="${REPS:-3}"
-NDOCS=4000000
+NDOCS="${NDOCS:-4000000}"
+NWORDS="${NWORDS:-40}"
 MEM=6144
 rm -f /tmp/engine.zip && zip -qr /tmp/engine.zip feature_store_spark
 mkdir -p "$ROOT" BENCH
@@ -36,7 +42,7 @@ run() { # execs: 2 or 8
     --conf spark.scheduler.minRegisteredResourcesRatio=1.0 \
     --conf spark.scheduler.maxRegisteredResourcesWaitingTime=180s \
     scripts/bench_job.py "$ROOT" 4000000 2000000 1000000 1000000 \
-    dedup 1 $NDOCS 2>/dev/null \
+    dedup 1 "$NDOCS" "$NWORDS" 2>/dev/null \
     | grep BENCHJSON | sed 's/^BENCHJSON //'
 }
 
@@ -44,20 +50,24 @@ echo "== generating docs cache (one-time, local[32]) =="
 spark-submit --master 'local[32]' --py-files /tmp/engine.zip \
   --conf spark.ui.enabled=false --driver-memory 12g \
   scripts/bench_job.py "$ROOT" 4000000 2000000 1000000 1000000 \
-  dedup 1 $NDOCS >/dev/null 2>&1 || true
+  dedup 1 "$NDOCS" "$NWORDS" >/dev/null 2>&1 || true
 
-rm -f BENCH/raw_cluster_dedup4m_8.jsonl BENCH/raw_cluster_dedup4m_32.jsonl
+RAW="BENCH/raw_cluster_dedup_n${NDOCS}_w${NWORDS}"
+rm -f "${RAW}_8.jsonl" "${RAW}_32.jsonl"
 for rep in $(seq "$REPS"); do
   for execs in 2 8; do
     cores=$((execs * 4))
     echo "== rep=$rep executors=$execs (cores=$cores, pinned) =="
     { probe; run $execs; } | paste -sd' ' - \
-      | tee -a "BENCH/raw_cluster_dedup4m_${cores}.jsonl"
+      | tee -a "${RAW}_${cores}.jsonl"
   done
 done
 
-python - <<'EOF'
+RAW="$RAW" python - <<'EOF'
 import json
+import os
+
+raw = os.environ["RAW"]
 
 def load(path, want_cores):
     rows = []
@@ -88,13 +98,14 @@ def load(path, want_cores):
         rows.append((p, r))
     return rows
 
-rows8 = load("BENCH/raw_cluster_dedup4m_8.jsonl", 8)
-rows32 = load("BENCH/raw_cluster_dedup4m_32.jsonl", 32)
+rows8 = load(f"{raw}_8.jsonl", 8)
+rows32 = load(f"{raw}_32.jsonl", 32)
 ok8 = [r for r in rows8 if r]
 ok32 = [r for r in rows32 if r]
 if not ok8 or not ok32:
     raise SystemExit("no valid samples on one side — rerun")
 n = ok8[0][1]["n_docs"]
+nwords = ok8[0][1]["n_words"]
 for stage in ("minhash_sec", "dedup_sec"):
     w8 = [r[stage] for _, r in ok8]
     w32 = [r[stage] for _, r in ok32]
@@ -103,7 +114,7 @@ for stage in ("minhash_sec", "dedup_sec"):
         round(a[1][stage] / b[1][stage] / 4, 2) if a and b else None
         for a, b in zip(rows8, rows32)
     ]
-    print(f"{stage[:-4]}: min 8c={b8}s ({n/b8:,.0f} docs/s) "
+    print(f"{stage[:-4]} (w={nwords}): min 8c={b8}s ({n/b8:,.0f} docs/s) "
           f"32c={b32}s ({n/b32:,.0f} docs/s) "
           f"spread8=±{(max(w8)-b8)/b8*100:.0f}% "
           f"spread32=±{(max(w32)-b32)/b32*100:.0f}% "

@@ -198,41 +198,30 @@ def test_empty_write_commits_empty_snapshot(spark, tmp_path):
     assert t.read(spark).count() == 1
 
 
-def test_manifest_jsonl_torn_tail_and_legacy_prefix(tmp_path):
+def test_manifest_jsonl_torn_tail(tmp_path):
     """Round-4 manifest rework (no Spark needed): the snapshot log is
     append-only JSONL; a torn final line (crash mid-append) is ignored on
-    read and repaired before the next append; a legacy _manifest.json
-    array is read as an immutable prefix."""
+    read and repaired before the next append."""
     import json
-    import os
 
     t = PartitionedTable(str(tmp_path), "t", "d")
-    os.makedirs(t.path, exist_ok=True)
-
-    # legacy prefix + two JSONL appends
-    legacy = [{"snapshot_id": "snap-legacy", "op": "overwrite",
-               "partitions": {"p1": 5}, "mapping": {"p1": ["v0"]},
-               "meta": {}, "touched": ["p1"]}]
-    with open(t._legacy_manifest_path, "w") as f:
-        json.dump(legacy, f)
     t._append_manifest({"snapshot_id": "snap-a", "op": "append",
                         "partitions": {"p1": 7}, "mapping": {"p1": ["v1"]},
                         "meta": {}, "touched": ["p1"]})
     log = t._read_manifest()
-    assert [e["snapshot_id"] for e in log] == ["snap-legacy", "snap-a"]
+    assert [e["snapshot_id"] for e in log] == ["snap-a"]
 
     # torn tail: partial json with no trailing newline → ignored on read
     with open(t._manifest_path, "a") as f:
         f.write('{"snapshot_id": "snap-torn", "par')
-    assert [e["snapshot_id"] for e in t._read_manifest()] == [
-        "snap-legacy", "snap-a"]
+    assert [e["snapshot_id"] for e in t._read_manifest()] == ["snap-a"]
 
     # next append repairs the tail first; the torn line never resurfaces
     t._append_manifest({"snapshot_id": "snap-b", "op": "append",
                         "partitions": {}, "mapping": {}, "meta": {},
                         "touched": []})
     ids = [e["snapshot_id"] for e in t._read_manifest()]
-    assert ids == ["snap-legacy", "snap-a", "snap-b"]
+    assert ids == ["snap-a", "snap-b"]
     # file itself holds exactly the two good JSONL lines
     with open(t._manifest_path) as f:
         lines = [ln for ln in f.read().splitlines() if ln.strip()]
@@ -393,3 +382,22 @@ def test_partition_meta_for_zero_row_partition_commits_empty(
     assert t.partition_info()["ghost"] == {"src": 2}  # overlay retained
     # reading a span including the empty partition just yields its peers
     assert t.read(spark, partitions=["a", "ghost"]).count() > 0
+
+
+def test_read_unknown_partition_raises(spark, df, tmp_path):
+    """A partition name the snapshot does not hold fails the read and
+    names the unknowns — a typo must not silently return a partial frame
+    (next to a non-empty partition) or an empty one (next to a
+    committed-empty partition)."""
+    t = PartitionedTable(str(tmp_path), "t", "grp")
+    t.write(df, mode="overwrite")
+    with pytest.warns(UserWarning, match="empty partitions"):
+        t.write(
+            df.where("grp = 'a'"), mode="overwrite_partitions",
+            partition_meta={"a": {}, "empty": {}},
+        )
+    assert t.read(spark, partitions=["a", "empty"]).count() == 2
+    with pytest.raises(FileNotFoundError, match=r"\['typo'\]"):
+        t.read(spark, partitions=["a", "typo"])
+    with pytest.raises(FileNotFoundError, match=r"\['typo', 'zz'\]"):
+        t.read(spark, partitions=["empty", "zz", "typo"])

@@ -213,3 +213,29 @@ def test_grouped_topk_spreads_identical_duplicates(spark):
     assert len(hot_rows) == 3
     assert (hot_rows.value == 1.5).all()
     assert sorted(hot_rows.rnk) == [1, 2, 3]
+
+
+def test_grouped_apply_ops(spark):
+    """applyInPandas custom ops: z-score parity with pandas, exact quantiles."""
+    import numpy as np
+
+    from feature_store_spark.operators.grouped import (
+        exact_quantiles,
+        zscore_normalize,
+    )
+
+    rng = np.random.default_rng(8)
+    pdf = pd.DataFrame({
+        "entity": [f"e{i % 4}" for i in range(400)],
+        "v": rng.normal(10, 3, 400),
+    })
+    sdf = spark.createDataFrame(pdf)
+    z = zscore_normalize(sdf, "entity", "v").toPandas()
+    for e, grp in pdf.groupby("entity"):
+        want = (grp["v"] - grp["v"].mean()) / grp["v"].std(ddof=0)
+        got = z[z.entity == e].set_index(z[z.entity == e]["v"])["zscore"]
+        assert np.allclose(sorted(got), sorted(want))
+    q = exact_quantiles(sdf, "entity", "v").toPandas().set_index("entity")
+    for e, grp in pdf.groupby("entity"):
+        assert q.loc[e, "q50"] == pytest.approx(grp["v"].quantile(0.5))
+        assert q.loc[e, "n"] == len(grp)
