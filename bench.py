@@ -224,15 +224,22 @@ def previous_bench() -> tuple[str | None, dict]:
             # fragment is the original object's exact suffix: prepending
             # a queries-dict opener reconstructs everything except the
             # first (renamed) query.
+            # A cut inside a LATER dict (e.g. the per-run "samples" lists)
+            # can parse too, with that dict's lists posing as query times:
+            # the recovery counts only when every value is a number.
             lines = doc["tail"].splitlines()
             frag = lines[-1].strip() if lines else ""
-            if frag:
-                try:
-                    rec = json.loads('{"queries": {"__truncated__":' + frag)
-                    rec["queries"].pop("__truncated__", None)
-                    doc = rec
-                except json.JSONDecodeError:
-                    pass
+            try:
+                rec = json.loads('{"queries": {"__truncated__":' + frag)
+            except json.JSONDecodeError:
+                return None, {}
+            rec["queries"].pop("__truncated__", None)
+            if not all(
+                isinstance(v, (int, float)) and not isinstance(v, bool)
+                for v in rec["queries"].values()
+            ):
+                return None, {}
+            doc = rec
         return os.path.basename(path), doc
     except Exception:
         return None, {}

@@ -13,6 +13,13 @@ the rows written, not the table size.  This is the Iceberg model (SURVEY.md
 §1.4) without the runtime jar (unavailable in-sandbox); the IO seam is this
 one module, so swapping in ``df.writeTo(...)`` is local.
 
+A commit is ONE Spark write job followed by a driver-side footer read: the
+per-partition row counts come from the parquet footers of the new version
+dir (``num_rows``, no data pages read), never from a second Spark job over
+the files just written.  The module assumes a LOCAL filesystem throughout —
+``read`` checks leaf dirs with ``os.path.exists`` and ``write`` lists and
+opens the new version dir with ``os``/``pyarrow``.
+
 Layout:  <root>/<table>/data/v{seq}/<partition_col>=<value>/*.parquet
          <root>/<table>/_manifest.jsonl  (append-only snapshot log)
 
@@ -60,6 +67,19 @@ def escape_path_name(value: str) -> str:
     return "".join(
         f"%{ord(c):02X}" if c in _PATH_ESCAPE_CHARS else c for c in value
     )
+
+
+def unescape_path_name(name: str) -> str:
+    """Exact inverse of :func:`escape_path_name`: every ``%XX`` decodes
+    (``%`` itself is always escaped, so a literal ``%`` never reaches
+    disk); ``+`` and space stay literal."""
+    return re.sub(
+        r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name
+    )
+
+
+# Spark's dir name for a NULL (or empty-string) partition value
+_HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 @dataclass
@@ -299,6 +319,11 @@ class PartitionedTable:
         cover many partitions, each content-addressed by its own inputs —
         see :meth:`partition_info`).
 
+        A commit is one Spark write job into a fresh ``v{seq}`` dir, then a
+        driver-side footer read of that dir (:meth:`_count_written`) for the
+        per-partition row counts, then the manifest append — data first,
+        so a crash before the append leaves an unreferenced dir only.
+
         Rows with a NULL partition value reject the whole commit (they land
         in an on-disk ``__HIVE_DEFAULT_PARTITION__`` dir that a manifest
         keyed by value could never read back); the manifest is not appended,
@@ -322,23 +347,7 @@ class PartitionedTable:
         seq = max(max_seq + 1, len(log))
         vdir = os.path.join(self.data_path, f"v{seq:04d}")
         df.write.partitionBy(self.partition_col).mode("overwrite").parquet(vdir)
-
-        # count ONLY the new version dir (commit cost ∝ rows written);
-        # explicit schema so an all-empty write (zero rows → no parquet
-        # files, just _SUCCESS) commits an empty snapshot instead of
-        # failing schema inference
-        spark = df.sparkSession
-        written = spark.read.schema(df.schema).option(
-            "basePath", vdir
-        ).parquet(vdir)
-        counted = written.groupBy(self.partition_col).count().collect()
-        if any(r[0] is None for r in counted):
-            raise ValueError(
-                f"{self.path}: NULL values in partition column "
-                f"{self.partition_col!r} — commit rejected (filter or fill "
-                "nulls before writing)"
-            )
-        new_counts = {str(r[0]): int(r[1]) for r in counted}
+        new_counts = self._count_written(vdir)
 
         # `log` already holds the parsed manifest — don't re-read it
         prev = self._entry_to_snapshot(log[-1]) if log else None
@@ -404,6 +413,36 @@ class PartitionedTable:
             entry["partition_meta"] = partition_meta
         self._append_manifest(entry)
         return Snapshot(snap_id, counts, mode, mapping, meta or {}, touched)
+
+    def _count_written(self, vdir: str) -> dict[str, int]:
+        """Rows per partition in a just-written version dir, from the
+        parquet footers (driver-side, no Spark job; commit cost stays ∝
+        files written).  The partition value is the ``col=value`` dir name
+        unescaped — the same string :meth:`read` derives from the path.
+        An all-empty write leaves no partition dirs (just ``_SUCCESS``)
+        and counts as ``{}``: an empty snapshot."""
+        import pyarrow.parquet as pq
+
+        prefix = f"{self.partition_col}="
+        counts: dict[str, int] = {}
+        for name in sorted(os.listdir(vdir)):
+            leaf = os.path.join(vdir, name)
+            if not (name.startswith(prefix) and os.path.isdir(leaf)):
+                continue
+            value = name[len(prefix):]
+            if value == _HIVE_NULL_PARTITION:
+                raise ValueError(
+                    f"{self.path}: NULL values in partition column "
+                    f"{self.partition_col!r} — commit rejected (filter or "
+                    "fill nulls before writing)"
+                )
+            counts[unescape_path_name(value)] = sum(
+                pq.read_metadata(os.path.join(leaf, f)).num_rows
+                for f in os.listdir(leaf)
+                # Spark's hidden-file rule: _SUCCESS, .crc checksums
+                if not f.startswith(("_", "."))
+            )
+        return counts
 
     # -- lifecycle ------------------------------------------------------
     def expire_snapshots(self, keep_last: int = 10) -> dict:

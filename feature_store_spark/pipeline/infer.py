@@ -239,22 +239,24 @@ class OnlineStore:
             out = sentinel.unionByName(out)
         self.sink.write(out, table, key)
 
-    def _read_pruned(
-        self, table: str, skeys: list[str], filters: list
-    ) -> pd.DataFrame:
-        """Read only the snapshot files whose key range intersects the
-        request (ranges manifest written at publish — file-level pruning;
-        the pyarrow predicate then filters rows within them).  Falls back
-        to the whole dataset when no manifest exists (pre-round-5
-        snapshots)."""
+    def _read_pruned(self, table: str, skeys: list[str], filters: list):
+        """Read (as a pyarrow Table) only the snapshot files whose key range
+        intersects the request (ranges manifest written at publish —
+        file-level pruning; the pyarrow predicate then filters rows within
+        them).  Falls back to the whole dataset when no manifest exists
+        (pre-round-5 snapshots).  Callers convert to pandas, so one that
+        splits the rows converts each part on its own, with the dtypes a
+        read of that part alone gives (an int column turns float64 only
+        in a part that holds a NULL)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         base = self._path(table)  # raises for external (non-parquet) sinks
         paths = self._kv.files_for_keys(table, skeys)
         if paths is None:
-            return pd.read_parquet(base, filters=filters)
+            return pq.read_table(base, filters=filters)
         if not paths:  # no file can hold any requested key
             import glob as _glob
-
-            import pyarrow.parquet as _pq
 
             files = sorted(_glob.glob(os.path.join(base, "*.parquet")))
             if not files:
@@ -262,25 +264,51 @@ class OnlineStore:
                 # zero file entries) — empty frame, not IndexError
                 # (round-5 ADVICE); key column name is enough structure
                 # for multi_get's downstream merge.
-                key_cols = self._kv.key_columns(table)
-                return pd.DataFrame(columns=key_cols or [])
-            return _pq.ParquetFile(files[0]).schema_arrow.empty_table() \
-                .to_pandas()
-        return pd.read_parquet(paths, filters=filters)
+                return pa.table({
+                    c: pa.array([], pa.string())
+                    for c in self._kv.key_columns(table)
+                })
+            return pq.ParquetFile(files[0]).schema_arrow.empty_table()
+        return pq.read_table(paths, filters=filters)
 
     def multi_get(self, table: str, keys: list, key: str) -> pd.DataFrame:
         """Fetch rows for the requested keys (the Redis multi-get):
         file-level pruning via the publish-time ranges manifest, then a
         pyarrow key predicate inside the touched files."""
         skeys = [str(k) for k in keys]
-        pdf = self._read_pruned(table, skeys, [(key, "in", skeys)])
-        return pdf.reset_index(drop=True)
+        return self._read_pruned(
+            table, skeys, [(key, "in", skeys)]
+        ).to_pandas().reset_index(drop=True)
 
     def get_defaults(self, table: str, key: str) -> pd.Series | None:
         pdf = self._read_pruned(
             table, [DEFAULT_KEY], [(key, "==", DEFAULT_KEY)]
-        )
+        ).to_pandas()
         return pdf.iloc[0] if len(pdf) else None
+
+    def _multi_get_with_defaults(
+        self, table: str, keys: list, key: str
+    ) -> tuple[pd.DataFrame, pd.Series | None]:
+        """:meth:`multi_get` and :meth:`get_defaults` from ONE store read:
+        the sentinel row is fetched with the requested keys and split off
+        before the pandas conversion, so both results (dtypes included)
+        equal the two separate reads.  The sentinel stays in the rows only
+        when ``keys`` itself asks for ``DEFAULT_KEY``."""
+        import pyarrow.compute as pc
+
+        skeys = [str(k) for k in keys]
+        fetch = skeys if DEFAULT_KEY in skeys else [*skeys, DEFAULT_KEY]
+        tbl = self._read_pruned(table, fetch, [(key, "in", fetch)])
+        if not tbl.num_rows:
+            return tbl.to_pandas().reset_index(drop=True), None
+        is_default = pc.equal(tbl[key], DEFAULT_KEY)
+        sentinel = tbl.filter(is_default).to_pandas()
+        if DEFAULT_KEY not in skeys:
+            tbl = tbl.filter(pc.invert(is_default))
+        return (
+            tbl.to_pandas().reset_index(drop=True),
+            sentinel.iloc[0] if len(sentinel) else None,
+        )
 
 
 def infer(
@@ -293,12 +321,14 @@ def infer(
     sentinel defaults — the reference's ``InferPipeline.run`` flow."""
     out = spine.copy()
     for table, key in tables.items():
-        got = store.multi_get(table, out[key].unique().tolist(), key)
+        # one store read per group: requested keys + the sentinel row
+        got, defaults = store._multi_get_with_defaults(
+            table, out[key].unique().tolist(), key
+        )
         # store keys are strings; merge on a stringified view of the spine key
         got = got.rename(columns={key: "__store_key"})
         out["__store_key"] = out[key].astype(str)
         out = out.merge(got, on="__store_key", how="left")
-        defaults = store.get_defaults(table, key)
         if defaults is not None:
             feat_cols = [c for c in got.columns if c != "__store_key"]
             # cold-start = key ABSENT from the store (membership test) —

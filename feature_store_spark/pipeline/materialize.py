@@ -743,8 +743,8 @@ def materialize(
     its entity's state row, and events in [D1..Dn] are joined exactly —
     so the result equals the per-date construction (pinned by
     test_batched_equals_per_date).  Lineage stays PER PARTITION (row
-    counts, skew, watermark), computed from two small per-batch
-    aggregation jobs; ~3 driver actions per batch ≪ 1 per date.
+    counts, skew, watermark), computed from three small per-batch
+    aggregates collected in ONE driver action ≪ 1 per date.
 
     ``asof_strategy="auto"`` picks union vs sliced per batch from the
     newest lineage record's ``skew_max_over_mean``
@@ -829,10 +829,11 @@ def materialize(
             )
 
         with sliced_cache_scope():
-            # three consumers per batch (as-of, watermark, feature-skew
-            # jobs) — persist the assembled frame once instead of
-            # re-running the state-resolution dedup window per consumer;
-            # registered to the scope, released after the batch commits
+            # three consumers per batch (the as-of, and the watermark and
+            # feature-skew branches of the lineage job) — persist the
+            # assembled frame once instead of re-running the
+            # state-resolution dedup window per consumer; registered to
+            # the scope, released after the batch commits
             from feature_store_spark.operators.caches import register_cache
 
             feats = feats.persist()
@@ -850,9 +851,13 @@ def materialize(
                 slice_duration="1d",
             )
 
-            # lineage inputs for the WHOLE batch: one per-date row-count +
-            # skew job, one per-feature-partition watermark job
-            stats_rows = (
+            # lineage inputs for the WHOLE batch in ONE driver action: the
+            # per-date obs row-count + skew rows, the per-feature-partition
+            # watermark rows and the FEATURE-side entity heat row (what the
+            # sliced strategy exists for, recorded so the NEXT batch's
+            # "auto" choice keys on the right side's skew), unioned and
+            # tagged by kind
+            obs_stats = (
                 obs.groupBy(obs_pcol, "image_id").count()
                 .groupBy(obs_pcol)
                 .agg(
@@ -860,41 +865,46 @@ def materialize(
                     F.max("count").alias("mx"),
                     F.avg("count").alias("mean"),
                 )
-                .collect()
+                .select(F.lit("obs").alias("kind"),
+                        F.col(obs_pcol).alias("part"), "n", "mx", "mean")
             )
-            stats = {r[obs_pcol]: r for r in stats_rows}
-            wm_rows = (
+            wm_stats = (
                 feats.groupBy("__feat_part")
                 .agg(F.max("event_time").alias("wm"))
-                .collect()
+                .select(F.lit("wm").alias("kind"),
+                        F.col("__feat_part").alias("part"), "wm")
             )
-            # FEATURE-side entity heat — what the sliced strategy exists
-            # for; one small per-batch aggregation recorded so the NEXT
-            # batch's "auto" choice keys on the right side's skew
-            fstat = (
+            feat_stats = (
                 feats.groupBy("image_id")
                 .agg(F.count(F.lit(1)).alias("c"))
                 .agg(
                     F.max("c").alias("mx"),
                     F.avg("c").alias("mean"),
-                    F.count(F.lit(1)).alias("n_entities"),
+                    F.count(F.lit(1)).alias("n"),
                 )
-                .first()
+                .select(F.lit("feat").alias("kind"), "n", "mx", "mean")
             )
+            lineage_rows = (
+                obs_stats.unionByName(wm_stats, allowMissingColumns=True)
+                .unionByName(feat_stats, allowMissingColumns=True)
+                .collect()
+            )
+            stats = {r["part"]: r for r in lineage_rows if r["kind"] == "obs"}
+            wm_rows = [r for r in lineage_rows if r["kind"] == "wm"]
+            # a global aggregate yields exactly one row, even over no input
+            fstat = next(r for r in lineage_rows if r["kind"] == "feat")
             feature_skew = (
                 round(float(fstat["mx"]) / float(fstat["mean"]), 3)
-                if fstat and fstat["mean"] else None
+                if fstat["mean"] else None
             )
-            feature_entities = (
-                int(fstat["n_entities"]) if fstat and fstat["mean"] else None
-            )
+            feature_entities = int(fstat["n"]) if fstat["mean"] else None
 
             out_snap = out_table.write(result, mode="overwrite_partitions")
 
         # watermark@D = max event_time over (state ∪ features ≤ D):
         # prefix max over the per-partition maxima, "" (state) first
         wm_sorted = sorted(
-            (r["__feat_part"], r["wm"]) for r in wm_rows if r["wm"] is not None
+            (r["part"], r["wm"]) for r in wm_rows if r["wm"] is not None
         )
         for part in batch:
             srow = stats.get(part)

@@ -98,12 +98,14 @@ def stream_enrich_to_table(
     from feature_store_spark.pipeline.materialize import read_state_asof
     from feature_store_spark.streaming.ingest import (
         committed_batch_ids,
-        make_batch_committer,
+        stream_meta,
     )
 
-    commit = make_batch_committer(out_table, checkpoint_dir)
-
     def enrich_and_commit(batch_df: DataFrame, batch_id: int) -> None:
+        # emptiness and replay are checked on the SOURCE batch, before the
+        # state is read; the enriched frame is never probed again (an
+        # isEmpty() on it would run the whole state dedup + join once
+        # more) — the left join is non-empty exactly when its input is
         if batch_df.isEmpty():
             return
         if batch_id in committed_batch_ids(out_table, checkpoint_dir):
@@ -124,7 +126,9 @@ def stream_enrich_to_table(
             out_table.partition_col,
             F.date_format(F.col(obs_time), "yyyy-MM-dd"),
         )
-        commit(out, batch_id)
+        out_table.write(
+            out, mode="append", meta=stream_meta(checkpoint_dir, batch_id)
+        )
 
     writer = (
         spark.readStream.schema(schema).parquet(source_dir)

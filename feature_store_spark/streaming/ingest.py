@@ -31,6 +31,13 @@ IMAGES_DDL = (
 )
 
 
+def stream_meta(checkpoint_dir: str, batch_id: int) -> dict:
+    """Manifest ``meta`` of a stream commit — the one definition of the
+    format :func:`committed_batch_ids` reads back."""
+    return {"stream_checkpoint": checkpoint_dir,
+            "stream_batch_id": int(batch_id)}
+
+
 def committed_batch_ids(table: PartitionedTable, checkpoint_dir: str) -> set[int]:
     """Batch ids already committed to ``table`` by the stream anchored at
     ``checkpoint_dir`` (from snapshot-manifest metadata)."""
@@ -44,7 +51,9 @@ def committed_batch_ids(table: PartitionedTable, checkpoint_dir: str) -> set[int
 
 def make_batch_committer(table: PartitionedTable, checkpoint_dir: str):
     """foreachBatch sink: append the micro-batch as one snapshot, skipping
-    batch ids already in the manifest (idempotent under replay)."""
+    batch ids already in the manifest (idempotent under replay).  The
+    ``isEmpty`` check stays here: within-watermark dedup can empty a
+    non-empty source batch."""
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -52,10 +61,7 @@ def make_batch_committer(table: PartitionedTable, checkpoint_dir: str):
         if batch_id in committed_batch_ids(table, checkpoint_dir):
             return  # replayed micro-batch — already committed
         table.write(
-            batch_df,
-            mode="append",
-            meta={"stream_checkpoint": checkpoint_dir,
-                  "stream_batch_id": int(batch_id)},
+            batch_df, mode="append", meta=stream_meta(checkpoint_dir, batch_id)
         )
 
     return commit_batch

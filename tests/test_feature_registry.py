@@ -336,3 +336,112 @@ def test_parquet_kv_sink_range_layout(spark, tmp_path):
 def test_duplicate_anchor_rejected(registry):
     with pytest.raises(ValueError):
         registry.register_anchor(FeatureAnchor(name="user_events", key="k"))
+
+
+def _infer_two_reads(store, spine, tables):
+    """``infer`` as it ran with two store reads per feature group (a
+    multi_get for the keys, then get_defaults for the sentinel row) —
+    the reference the one-read path must match exactly."""
+    out = spine.copy()
+    for table, key in tables.items():
+        got = store.multi_get(table, out[key].unique().tolist(), key)
+        got = got.rename(columns={key: "__store_key"})
+        out["__store_key"] = out[key].astype(str)
+        out = out.merge(got, on="__store_key", how="left")
+        defaults = store.get_defaults(table, key)
+        if defaults is not None:
+            feat_cols = [c for c in got.columns if c != "__store_key"]
+            miss = ~out["__store_key"].isin(got["__store_key"])
+            for c in feat_cols:
+                out.loc[miss, c] = defaults[c]
+        out = out.drop(columns="__store_key")
+    return out
+
+
+def _serving_stores(spark, root):
+    """Three published groups: string keys over several range files with
+    a NULL first feature and an int column whose default is NULL;
+    integer keys; and a group published without defaults."""
+    store = OnlineStore(root, sink=ParquetKVSink(root, n_files=3))
+    n = 60
+    store.publish(
+        "str_keys",
+        spark.createDataFrame(pd.DataFrame({
+            "user_id": [f"u{i:03d}" for i in range(n)],
+            "f_first": [None if i == 3 else i / 2 for i in range(n)],
+            "f_int": list(range(n)),
+            "f_str": [f"s{i}" for i in range(n)],
+            "f_flag": [i % 2 == 0 for i in range(n)],
+        })),
+        key="user_id",
+        defaults={"f_first": -1.0, "f_int": None, "f_str": "none",
+                  "f_flag": False},
+    )
+    store.publish(
+        "int_keys",
+        spark.createDataFrame(pd.DataFrame({
+            "item": list(range(0, 40, 2)),
+            "g": [float(i) for i in range(20)],
+        })),
+        key="item",
+        defaults={"g": 0.5},
+    )
+    store.publish(
+        "no_defaults",
+        spark.createDataFrame(pd.DataFrame({
+            "user_id": [f"u{i:03d}" for i in range(0, n, 3)],
+            "h": [float(i) for i in range(0, n, 3)],
+        })),
+        key="user_id",
+    )
+    return store
+
+
+@pytest.mark.parametrize("case", [
+    "hot", "cold", "duplicated", "null_first", "asks_default", "empty",
+    "int_keys", "int_keys_cold", "no_defaults", "two_groups",
+])
+def test_infer_one_read_equals_two_reads(spark, tmp_path, case):
+    """One store read per feature group (keys + sentinel, split before
+    the pandas conversion) serves frames identical to the two-read
+    path, dtypes included."""
+    store = _serving_stores(spark, str(tmp_path / "online"))
+    spines = {
+        "hot": ({"user_id": ["u001", "u010", "u059"]}, {"str_keys": "user_id"}),
+        "cold": ({"user_id": ["zz1", "a0"]}, {"str_keys": "user_id"}),
+        "duplicated": ({"user_id": ["u002", "zz", "u002", "zz", "u040"]},
+                       {"str_keys": "user_id"}),
+        "null_first": ({"user_id": ["u003", "u004", "cold"]},
+                       {"str_keys": "user_id"}),
+        "asks_default": ({"user_id": [DEFAULT_KEY, "u005", "cold"]},
+                         {"str_keys": "user_id"}),
+        "empty": ({"user_id": pd.Series([], dtype=object)},
+                  {"str_keys": "user_id"}),
+        "int_keys": ({"item": [2, 4, 4, 7, 38]}, {"int_keys": "item"}),
+        "int_keys_cold": ({"item": [1, 99]}, {"int_keys": "item"}),
+        "no_defaults": ({"user_id": ["u003", "u004", "cold"]},
+                        {"no_defaults": "user_id"}),
+        "two_groups": ({"user_id": ["u003", "u004", "cold", DEFAULT_KEY]},
+                       {"str_keys": "user_id", "no_defaults": "user_id"}),
+    }
+    cols, tables = spines[case]
+    spine = pd.DataFrame(cols)
+    got = infer(store, spine, tables)
+    pd.testing.assert_frame_equal(got, _infer_two_reads(store, spine, tables))
+    if case == "asks_default":
+        row = got.set_index("user_id").loc[DEFAULT_KEY]
+        assert row["f_first"] == -1.0 and row["f_str"] == "none"
+    # the one read splits into exactly the two reads' frames: the int
+    # column of the key rows stays int64 although the sentinel row read
+    # with them holds a NULL there
+    for table, key in tables.items():
+        keys = spine[key].unique().tolist()
+        rows, defaults = store._multi_get_with_defaults(table, keys, key)
+        pd.testing.assert_frame_equal(rows, store.multi_get(table, keys, key))
+        want = store.get_defaults(table, key)
+        if want is None:
+            assert defaults is None
+        else:
+            pd.testing.assert_series_equal(defaults, want)
+        if table == "str_keys" and case == "hot":
+            assert rows["f_int"].dtype == np.int64

@@ -101,6 +101,15 @@ def test_null_partition_value_rejects_commit(spark, tmp_path):
         t.write(bad, mode="overwrite")
     # commit rejected atomically: no snapshot exists
     assert t.current_snapshot() is None
+    # on a table with commits, the manifest stays byte-identical
+    t.write(bad.where("grp is not null"), mode="overwrite")
+    with open(t._manifest_path, "rb") as f:
+        before = f.read()
+    with pytest.raises(ValueError, match="NULL values in partition column"):
+        t.write(bad, mode="append")
+    with open(t._manifest_path, "rb") as f:
+        assert f.read() == before
+    assert t.read(spark).count() == 1
 
 
 def test_missing_dir_raises(spark, df, tmp_path):
@@ -191,11 +200,15 @@ def test_empty_write_commits_empty_snapshot(spark, tmp_path):
     assert snap.partitions == {}
     assert t.partitions() == []
     # a later real write proceeds normally
-    t.write(
+    full = t.write(
         spark.createDataFrame(pd.DataFrame({"k": [1], "grp": ["a"], "v": [1.0]})),
         mode="overwrite_partitions",
     )
     assert t.read(spark).count() == 1
+    # an empty append on top of data commits a snapshot keeping every count
+    again = t.write(empty, mode="append")
+    assert again.partitions == full.partitions == {"a": 1}
+    assert len(t._read_manifest()) == 3
 
 
 def test_manifest_jsonl_torn_tail(tmp_path):
@@ -401,3 +414,60 @@ def test_read_unknown_partition_raises(spark, df, tmp_path):
         t.read(spark, partitions=["a", "typo"])
     with pytest.raises(FileNotFoundError, match=r"\['typo', 'zz'\]"):
         t.read(spark, partitions=["empty", "zz", "typo"])
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted by job group from the status
+    tracker (the listener bus is drained first: job-start events reach
+    the tracker asynchronously)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_counts_equal_readback_for_escaped_values(spark, tmp_path):
+    """Manifest counts come from the new version dir's parquet footers
+    with the partition value unescaped from the dir name; they must
+    equal a groupBy count of the read-back table for values Spark
+    escapes ('%', ':', '=', '/'), values it leaves literal ('+', space)
+    and non-ASCII ones — over several files per partition."""
+    vals = ["a+b", "50%", "t:1", "k=v", "x/y", "p q", "ünï", "plain"]
+    rows = [(v, i) for i in range(40) for v in vals[: 1 + i % len(vals)]]
+    df = spark.createDataFrame(rows, "part string, i int").repartition(3)
+    t = PartitionedTable(str(tmp_path), "esc", "part")
+    snap = t.write(df, mode="overwrite")
+    want = {
+        r["part"]: r["count"]
+        for r in t.read(spark).groupBy("part").count().collect()
+    }
+    assert snap.partitions == want
+    assert set(want) == set(vals)
+    assert t.current_snapshot().partitions == want
+    # append adds the footer counts of the new dir to the old ones
+    snap2 = t.write(df.where("part = 'x/y'"), mode="append")
+    assert snap2.partitions["x/y"] == 2 * want["x/y"]
+    assert t.read(spark, partitions=["x/y"]).count() == 2 * want["x/y"]
+
+
+def test_commit_of_shuffle_free_frame_is_one_spark_job(spark, tmp_path):
+    """A commit is the write job and nothing else: the row counts come
+    from the footers driver-side, not from a second job over the files
+    just written."""
+    t = PartitionedTable(str(tmp_path), "one_job", "grp")
+    frame = spark.range(200).selectExpr(
+        "id", "cast(id % 4 as string) as grp"
+    )
+    snaps = []
+    assert _jobs_started(
+        spark, lambda: snaps.append(t.write(frame, mode="overwrite"))
+    ) == 1
+    assert snaps[0].partitions == {str(g): 50 for g in range(4)}

@@ -684,3 +684,69 @@ def test_random_mutation_sequence_equals_batch(spark, tmp_path):
         ), step
         # stale partitions beyond the feature table's mapping never linger
         assert set(feats_t.partitions()) == set(current)
+
+
+# Lineage records the three-action lineage code (one collect per aggregate:
+# obs stats, per-feature-partition watermarks, feature-side skew) wrote for
+# the input of test_lineage_records_equal_three_action_records:
+# (partition, rows_obs == rows_out, skew_max_over_mean,
+#  feature_skew_max_over_mean, feature_entities, watermark, asof_strategy)
+_THREE_ACTION_LINEAGE = [
+    ("2023-12-30", 1, 1.0, None, None, None, "sliced"),
+    ("2023-12-31", 2, 1.0, None, None, None, "sliced"),
+    ("2024-01-01", 6, 1.667, 1.067, 2, "2024-01-01 16:07:00", "union"),
+    ("2024-01-02", 2, 1.0, 1.067, 2, "2024-01-02 23:59:00", "union"),
+    ("2024-01-03", 3, 1.0, 2.365, 3, "2024-01-03 22:43:00", "sliced"),
+    ("2024-01-04", 6, 1.333, 2.365, 3, "2024-01-04 11:47:00", "sliced"),
+    ("2024-01-05", 7, 1.714, 2.0, 4, "2024-01-05 12:55:00", "sliced"),
+    ("2024-01-06", 4, 1.5, 2.0, 4, "2024-01-06 13:51:00", "sliced"),
+    ("2024-01-07", 6, 2.0, 2.5, 6, "2024-01-07 14:46:00", "sliced"),
+    ("2024-01-08", 1, 1.0, 2.5, 6, "2024-01-08 16:43:00", "sliced"),
+    ("2024-01-09", 6, 1.5, 1.714, 6, "2024-01-09 16:43:00", "sliced"),
+    ("2024-01-10", 4, 1.0, 1.714, 6, "2024-01-09 16:43:00", "sliced"),
+]
+
+
+def test_lineage_records_equal_three_action_records(spark, tmp_path):
+    """The lineage inputs come from ONE collect over the tagged union of
+    the three per-batch aggregates; the _lineage.jsonl records must equal
+    what three separate actions produced on the same input.  The input
+    covers a batch with no feature rows (NULL feature skew and
+    watermark), a state carry across batches, and "auto" strategy picks
+    that read the previous batch's records."""
+    root = str(tmp_path)
+    img = generate_images(n_rows=120, n_entities=6, seed=31)
+    obs = generate_observations(img, n_obs=40, seed=32)
+    early = obs.head(3).copy()
+    early["obs_time"] = pd.to_datetime(
+        ["2023-12-30 08:00", "2023-12-31 09:00", "2023-12-31 10:00"]
+    )
+    obs = pd.concat([early, obs], ignore_index=True)
+    img["event_date"] = img["event_time"].dt.strftime("%Y-%m-%d")
+    obs["obs_date"] = obs["obs_time"].dt.strftime("%Y-%m-%d")
+    images_t = PartitionedTable(root, "images", "event_date")
+    obs_t = PartitionedTable(root, "observations", "obs_date")
+    images_t.write(spark.createDataFrame(img), mode="overwrite")
+    obs_t.write(spark.createDataFrame(obs), mode="overwrite")
+    out_t = PartitionedTable(f"{root}/out", "features", "obs_date")
+    lin = LineageLog(f"{root}/out/_lineage.jsonl")
+    materialize(
+        spark, images_t, obs_t, out_t,
+        CheckpointManifest(f"{root}/out/_checkpoint.jsonl"), lin,
+        asof_strategy="auto", batch_dates=2,
+    )
+    want = [
+        {
+            "partition": part,
+            "input_snapshot": "snap-0000-1404644efef786a6",
+            "rows_obs": n,
+            "rows_out": n,
+            "skew_max_over_mean": skew,
+            "feature_skew_max_over_mean": fskew,
+            "feature_entities": fent,
+            "watermark": wm,
+            "asof_strategy": strategy,
+        }
+        for part, n, skew, fskew, fent, wm, strategy in _THREE_ACTION_LINEAGE
+    ]
+    assert lin.records() == want

@@ -145,3 +145,48 @@ def test_stream_enrich_exactly_once_with_state_refresh(spark, tmp_path,
     # restarting the drained query with no new files appends nothing
     drain([])
     assert len(out_t.read(spark).toPandas()) == 3
+
+def test_each_enrich_batch_commits_one_snapshot_with_stream_meta(
+    spark, tmp_path, state_pdf
+):
+    """The enriched frame is committed straight to the table (no second
+    emptiness probe on it): each micro-batch with rows is exactly one
+    append snapshot carrying the stream meta, and a drain with no new
+    files commits nothing."""
+    src = str(tmp_path / "obs_in")
+    os.makedirs(src)
+    state_t = PartitionedTable(str(tmp_path), "state", "event_date")
+    out_t = PartitionedTable(str(tmp_path), "enriched", "obs_date")
+    ckpt = str(tmp_path / "ckpt")
+    s = state_pdf.assign(event_date="2024-01-01", session_id_idx=0)
+    state_t.write(spark.createDataFrame(s), mode="overwrite",
+                  partition_meta={"2024-01-01": {"state_kind": "snapshot"}})
+
+    for i, (ent, t) in enumerate([("a", "10:30"), ("b", "11:30"),
+                                  ("c", "12:30")]):
+        write_parquet(
+            pd.DataFrame({"image_id": [ent, "zz"],
+                          "obs_id": [f"o{i}", f"cold{i}"],
+                          "obs_time": [_ts(t), _ts(t)]}),
+            os.path.join(src, f"f{i}.parquet"),
+        )
+        stream_enrich_to_table(
+            spark, src, _OBS_SCHEMA, state_t, out_t, ckpt,
+            feature_cols=["phash", "mean_r"],
+        ).awaitTermination(120)
+    stream_enrich_to_table(
+        spark, src, _OBS_SCHEMA, state_t, out_t, ckpt,
+        feature_cols=["phash", "mean_r"],
+    ).awaitTermination(120)
+
+    log = out_t._read_manifest()
+    assert [e["op"] for e in log] == ["append"] * 3
+    assert [e["meta"] for e in log] == [
+        {"stream_checkpoint": ckpt, "stream_batch_id": b} for b in range(3)
+    ]
+    assert [e["partitions"] for e in log] == [
+        {"2024-01-01": 2 * (b + 1)} for b in range(3)
+    ]
+    got = out_t.read(spark).toPandas().set_index("obs_id").sort_index()
+    assert len(got) == 6
+    assert got.loc["o2", "phash"] == 33 and pd.isna(got.loc["cold2", "phash"])
